@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, max}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.util.Try
 
 /** Jobs-per-query probe (VERDICT r13 "Next round" #2): at sf0.1 the
   * median declared query is ~0.3 s and 8-core ≈ 32-core — the bench is
@@ -11,7 +13,10 @@ import java.util.concurrent.atomic.AtomicInteger
   * is the NUMBER of Spark jobs a query spawns (eager localCheckpoints,
   * `head()` threshold resolution, per-round loop actions), not per-task
   * compute. This probe counts SparkListenerJobStart events per declared
-  * query so a jobs-per-query drop is measurable, not asserted.
+  * query, split into the jobs that building the DataFrame runs and the
+  * jobs that executing it runs, so a jobs-per-query drop is measurable,
+  * not asserted. Execution is the full declared plan written to the
+  * `noop` sink: `count()` lets Catalyst prune columns and the final sort.
   *
   * Mirrors Bench's warmup discipline (JVM warmup, full-width table touch,
   * shared stages built first) so per-query counts cover each query's OWN
@@ -19,7 +24,9 @@ import java.util.concurrent.atomic.AtomicInteger
   * pays one-time memo/broadcast warmup whose jobs are not plan-intrinsic.
   *
   * Usage: runMain graft.JobCountProbe <sfDir> <query> [query ...]
-  * Prints one `JOBS <name> <jobs> <seconds>` line per query.
+  * Prints one `JOBS <name> <construct_jobs> <exec_jobs> <seconds>` line
+  * per query; seconds cover construction plus execution and are negative
+  * when the query failed.
   */
 object JobCountProbe {
   def main(args: Array[String]): Unit = {
@@ -39,6 +46,7 @@ object JobCountProbe {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     })
+    def drained(): Int = { Bridge.drainListenerBus(spark.sparkContext); jobs.get() }
     spark.range(1000).selectExpr("sum(id)").collect()
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
                   "orders", "lineitem", "events", "documents", "embeddings")) {
@@ -51,25 +59,17 @@ object JobCountProbe {
     operators.Windows.prepareSharedStages(spark, sfDir)
     for (name <- names) {
       val fn = SparkEntry.queries(name)
-      try { fn(spark, sfDir).count() }
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[jobs] $name warm run failed: ${e.getMessage}") }
-      // listener events are posted asynchronously (the bus is
-      // private[spark], so no waitUntilEmpty): poll until the counter is
-      // stable for 200 ms before sampling either endpoint
-      def drained(): Int = {
-        var prev = -1
-        var cur = jobs.get()
-        while (cur != prev) { prev = cur; Thread.sleep(200); cur = jobs.get() }
-        cur
-      }
       val j0 = drained()
       val q0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case e: Throwable =>
-                 System.err.println(s"[jobs] $name failed: ${e.getMessage}"); false }
+      val built = Try(fn(spark, sfDir))
+      val j1 = drained()
+      val run = built.map(_.write.format("noop").mode("overwrite").save())
       val s = (System.nanoTime() - q0) / 1e9
-      println(f"JOBS $name ${drained() - j0} ${if (ok) s else -s}%.3f")
+      run.failed.foreach(e => System.err.println(s"[jobs] $name failed: ${e.getMessage}"))
+      println(f"JOBS $name ${j1 - j0} ${drained() - j1} ${if (run.isSuccess) s else -s}%.3f")
     }
     spark.stop()
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Central table loader for the engine.
   *
@@ -28,8 +28,23 @@ object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     name match {
       case "events" => events(spark, sfDir)
-      case other    => spark.read.parquet(s"$sfDir/$other.parquet")
+      case other    => parquet(spark, s"$sfDir/$other.parquet")
     }
+
+  /** Footer schemas by (path, length, mtime). Spark infers a parquet
+    * schema with one Spark job per read, so without this every declared
+    * query ran one job per table it touches while its DataFrame was
+    * being built; a rewritten file changes its key.
+    */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), StructType]()
+
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val schema = schemas.computeIfAbsent((st.getPath.toString, st.getLen, st.getModificationTime),
+      _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(spark: SparkSession, d: String): DataFrame   = table(spark, d, "region")
   def nation(spark: SparkSession, d: String): DataFrame   = table(spark, d, "nation")
@@ -51,7 +66,7 @@ object Tables {
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = parquet(spark, s"$sfDir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)"))

@@ -1,11 +1,11 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables}
+import graft.{BoundedLoop, Q, QueryModule, Tables}
 import graft.Tables.dec
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, StructType}
 
 /** SURVEY.md §2.1.D — aggregation operators.
   *
@@ -1941,10 +1941,9 @@ object Aggregations extends QueryModule {
     *
     * Scale notes: the only fact-scale work is the lead-window pair
     * count (one user-keyed shuffle — same as the transition-matrix
-    * row); the k×k probability matrix is checkpointed ONCE and the 8
-    * power rounds π←πP are unrolled into a single plan of chained
-    * joins over that checkpointed k-row frame (no per-round action —
-    * iteration cost is corpus-independent and pays one job). The state
+    * row); the k×(k+1) cell table is checkpointed ONCE and the 8
+    * power rounds π←πP run over it in one `BoundedLoop` task
+    * (`markovStep`) — iteration cost is corpus-independent. The state
     * set is the union of sources and successors, so absorbing states
     * (appearing only as a successor) keep the mass that flows into
     * them instead of being dropped. Per-round 9 dp decimal rounding
@@ -1966,45 +1965,8 @@ object Aggregations extends QueryModule {
         .agg(count(lit(1)).as("c"))
         .repartition(1)
         .transform(graft.Checkpoints.cut)
-      // DRIVER-SIDE power rounds (r14, VERDICT r13 #2 / guide §5): the
-      // checkpointed cell table is k×(k+1) rows (k = event-type
-      // vocabulary — the same bounded-table assumption the existing
-      // repartition(1) + unrolled 8-round plan already makes), yet the
-      // unrolled join chain cost 12 Spark jobs and a 73 kB plan for a
-      // 5-row answer. The cells are collected once; each round
-      // replicates the Spark expressions operation-for-operation —
-      // row-normalized p = round(c/Σc, 9), contribution round(p·pr, 12)
-      // HALF_UP summed as exact scale-12 decimals, π' = round(Σ, 9),
-      // absorbing states coalesce to 0.0 — and the iterate returns as a
-      // local relation; the empirical-share join below is unchanged.
-      def round9(x: Double): Double =
-        java.math.BigDecimal.valueOf(x)
-          .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-      def bd12(x: Double): java.math.BigDecimal =
-        java.math.BigDecimal.valueOf(x)
-          .setScale(12, java.math.RoundingMode.HALF_UP)
-      val cellRows: Seq[(String, String, Long)] = cells.collect().toSeq
-        .map(r => (r.getString(0), if (r.isNullAt(1)) null else r.getString(1), r.getLong(2)))
-      val rowSums = cellRows.filter(_._2 != null).groupBy(_._1)
-        .map { case (cur, rs) => (cur, rs.map(_._3).sum) }
-      val pmP = cellRows.collect { case (cur, nxt, c) if nxt != null =>
-        (cur, nxt, round9(c.toDouble / rowSums(cur).toDouble)) }
-      val statesP: Seq[String] = (pmP.map(_._1) ++ pmP.map(_._2)).distinct
-      val kkD = statesP.size.toDouble
-      var piP: Map[String, Double] = statesP.map(t => (t, 1.0 / kkD)).toMap
-      for (_ <- 1 to 8) {
-        val sums = pmP.groupBy(_._2).map { case (t, rs) =>
-          (t, rs.map { case (cur, _, p) => bd12(p * piP(cur)) }.reduce(_.add(_))) }
-        piP = statesP.map(t =>
-          (t, sums.get(t).map(s => round9(s.doubleValue)).getOrElse(0.0))).toMap
-      }
-      import scala.jdk.CollectionConverters._
-      val pi = spark.createDataFrame(
-        piP.toSeq.map { case (t, p) => org.apache.spark.sql.Row(t, p) }.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("t",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("pr", DoubleType))))
+      val pi = BoundedLoop("agg_markov_stationary", Seq(cells),
+        StructType.fromDDL("t STRING, pr DOUBLE"))(markovStep)
       val emp = cells.groupBy($"cur".as("t")).agg(sum($"c").as("n"))
       val tot = emp.agg(sum($"n").as("total"))
       pi
@@ -2059,6 +2021,27 @@ object Aggregations extends QueryModule {
       ORDER BY event_type
       """.stripMargin.trim
     })
+
+  /** Markov's 8 power rounds over (cur, nxt, c) cells, as the oracle's
+    * SQL: p = round(c / Σc per cur, 9) over cells with a successor, then
+    * π'(t) = round(Σ DECIMAL(28,12) of round(p·π(cur), 12), 9), and 0.0
+    * for a state nothing flows into.
+    */
+  private[graft] def markovStep(in: IndexedSeq[Seq[Row]]): Seq[Row] = {
+    val pairs = in(0).collect { case r if !r.isNullAt(1) =>
+      (r.getString(0), r.getString(1), r.getLong(2)) }
+    val rowSums = pairs.groupMapReduce(_._1)(_._3)(_ + _)
+    val pm = pairs.map { case (cur, nxt, c) =>
+      (cur, nxt, BoundedLoop.round(c.toDouble / rowSums(cur).toDouble, 9)) }
+    val states = (pm.map(_._1) ++ pm.map(_._2)).distinct
+    var pi = states.map(t => (t, 1.0 / states.size)).toMap
+    for (_ <- 1 to 8) {
+      val flow = pm.groupMap(_._2) { case (cur, _, p) => BoundedLoop.round(p * pi(cur), 12) }
+      pi = states.map(t => (t, flow.get(t).fold(0.0)(xs =>
+        BoundedLoop.round(BoundedLoop.decimalSum(xs, 12), 9)))).toMap
+    }
+    pi.toSeq.map { case (t, p) => Row(t, p) }
+  }
 
   /** Entropy rate of the event-type chain (SURVEY §2 I-sept): the
     * conditional entropy H(next | cur) in bits — the predictability

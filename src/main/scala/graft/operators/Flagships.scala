@@ -1,10 +1,11 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables}
+import graft.{BoundedLoop, Q, QueryModule, Tables}
 import graft.Tables.dec
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
 /** SURVEY.md §2.1.L — composed analytical pipelines: TPC-H-shaped
   * multi-join queries adapted to this corpus's columns (the fixtures
@@ -867,15 +868,14 @@ object Flagships extends QueryModule {
     * Scale notes (100 TB): the ONLY fact-scale work is the edge
     * aggregation (map-side combinable, shuffle keyed on 625 nation
     * pairs); the iteration runs on the aggregated graph — node-count
-    * sized, orders below the corpus — collected once and powered on the
-    * driver (r14: the unrolled window-over-join lineage was 29 Spark
+    * sized, orders below the corpus — in one `BoundedLoop` task
+    * (`pagerankStep`; the unrolled window-over-join lineage was 29 Spark
     * jobs of scheduling for a 25-row answer).
     * Determinism: out-weight shares divide one exact decimal by
     * another (cast to double identically on both engines), per-round
     * contributions round to 9 dp before an exact scale-9 decimal sum
     * (order-independent), so iteration count — not float ordering —
-    * decides every digit; the driver loop replicates those expressions
-    * operation-for-operation.
+    * decides every digit.
     */
   lazy val graphPagerankTrade = Q(
     "graph_pagerank_trade",
@@ -883,53 +883,12 @@ object Flagships extends QueryModule {
       import spark.implicits._
       val w = org.apache.spark.sql.expressions.Window.partitionBy($"src")
       val edges = nationTradeEdges(spark, dir)
-        .select($"src", $"dst",
+        .select($"src".cast(LongType), $"dst".cast(LongType),
           ($"wgt".cast(DoubleType) / sum($"wgt").over(w).cast(DoubleType)).as("ratio"))
-      val nodes = Tables.nation(spark, dir).select($"n_nationkey".as("node"), $"n_name")
-      // DRIVER-SIDE power iteration (r14, VERDICT r13 #8 / guide §5):
-      // the ratio table is ≤ nation² rows and the iterate ≤ nations rows
-      // BY CONSTRUCTION, yet the unrolled window-over-join lineage cost
-      // 29 Spark jobs (checkpoints, broadcast builds, the mid-point cut)
-      // for a 25-row answer. The out-weight ratios (exact-decimal
-      // division, computed in Spark as before) and node list are
-      // collected ONCE; each round replicates the Spark arithmetic
-      // bit-for-bit — contribution = round(pr·ratio, 9) HALF_UP (the
-      // round6 recipe at 9 dp), summed as exact scale-9 BigDecimals
-      // (the DECIMAL(28,9) sum), dangling mass cast the same way, and
-      // pr' = round(0.15/n + 0.85·(s + dm/n), 9) in the identical
-      // expression order. The iterate returns as a LocalTableScan and
-      // the name join / 6 dp output below is unchanged Spark.
-      def round9(x: Double): Double =
-        java.math.BigDecimal.valueOf(x)
-          .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()
-      def bd9(x: Double): java.math.BigDecimal =
-        java.math.BigDecimal.valueOf(x)
-          .setScale(9, java.math.RoundingMode.HALF_UP)
-      val edgeP: Seq[(Any, Any, Double)] =
-        edges.collect().toSeq.map(r => (r.get(0), r.get(1), r.getDouble(2)))
-      val nodeIds: Seq[Any] = nodes.select($"node").collect().toSeq.map(_.get(0))
-      val nnD = nodeIds.size.toDouble
-      val srcSet: Set[Any] = edgeP.map(_._1).toSet
-      var prP: Map[Any, Double] = nodeIds.map(n => (n, 1.0 / nnD)).toMap
-      for (_ <- 1 to 8) {
-        // dangling-node mass (no out-edges) redistributes uniformly —
-        // the standard fix that conserves probability mass exactly
-        val dm = nodeIds.collect { case n if !srcSet(n) => bd9(prP(n)) }
-          .reduceOption(_.add(_)).map(_.doubleValue).getOrElse(0.0)
-        val zero = java.math.BigDecimal.ZERO.setScale(9)
-        val s = scala.collection.mutable.Map[Any, java.math.BigDecimal](
-          nodeIds.map(n => (n, zero)): _*)
-        for ((src, dst, ratio) <- edgeP)
-          s(dst) = s(dst).add(bd9(round9(prP(src) * ratio)))
-        prP = nodeIds.map(n =>
-          (n, round9(0.15 / nnD + 0.85 * (s(n).doubleValue + dm / nnD)))).toMap
-      }
-      import scala.jdk.CollectionConverters._
-      val pr = spark.createDataFrame(
-        prP.toSeq.map { case (n, p) => org.apache.spark.sql.Row(n, p) }.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", nodes.schema("node").dataType),
-          org.apache.spark.sql.types.StructField("pr", DoubleType))))
+      val nodes = Tables.nation(spark, dir)
+        .select($"n_nationkey".cast(LongType).as("node"), $"n_name")
+      val pr = BoundedLoop("graph_pagerank_trade", Seq(nodes.select($"node"), edges),
+        StructType.fromDDL("node BIGINT, pr DOUBLE"))(pagerankStep)
       pr.join(broadcast(nodes), "node")
         .select($"node".as("n_nationkey"), $"n_name", round($"pr", 6).as("pagerank"))
         .orderBy($"pagerank".desc, $"n_nationkey")
@@ -981,6 +940,28 @@ object Flagships extends QueryModule {
       """.stripMargin.trim
     })
 
+  /** PageRank's 8 rounds over (node) and (src, dst, ratio) rows, as the
+    * oracle's SQL: contribution round(pr·ratio, 9) summed as DECIMAL(28,9),
+    * dangling mass (nodes that are no edge's src) likewise, then
+    * pr' = round(0.15/n + 0.85·(s + dm/n), 9). An edge whose src or dst is
+    * not a node is dropped, as the inner join / left join drop it.
+    */
+  private[graft] def pagerankStep(in: IndexedSeq[Seq[Row]]): Seq[Row] = {
+    val nodes = in(0).map(_.getLong(0))
+    val edges = in(1).map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val n = nodes.size.toDouble
+    val srcs = edges.map(_._1).toSet
+    var pr = nodes.map(v => (v, 1.0 / n)).toMap
+    for (_ <- 1 to 8) {
+      val dm = BoundedLoop.decimalSum(nodes.filterNot(srcs).map(pr), 9)
+      val into = edges.flatMap { case (src, dst, ratio) =>
+        pr.get(src).map(p => (dst, BoundedLoop.round(p * ratio, 9))) }.groupMap(_._1)(_._2)
+      pr = nodes.map(v => (v, BoundedLoop.round(
+        0.15 / n + 0.85 * (BoundedLoop.decimalSum(into.getOrElse(v, Nil), 9) + dm / n), 9))).toMap
+    }
+    pr.toSeq.map { case (v, p) => Row(v, p) }
+  }
+
   /** Weighted label propagation communities over the nation trade graph
     * (SURVEY §2 I-sext) — the clustering sibling of
     * `graph_pagerank_trade`: PageRank RANKS nodes by trade mass, LPA
@@ -994,11 +975,10 @@ object Flagships extends QueryModule {
     *
     * Scale notes: the only fact-scale work is the one edge aggregation
     * (identical to PageRank's); the symmetrized graph is nation-pair
-    * sized and each round is an argmax window over the ≤2·625-row vote
-    * table, checkpointed per round via `Checkpoints.cut` (reliable FS
-    * checkpoint on a cluster, executor-local blocks here). Edge weights
-    * are exact decimal revenue, so argmax ordering — and therefore every
-    * community — is reproducible on any engine or partitioning.
+    * sized, so the three rounds run in one `BoundedLoop` task
+    * (`labelPropagationStep`). Edge weights are exact decimal revenue,
+    * so argmax ordering — and therefore every community — is
+    * reproducible on any engine or partitioning.
     */
   val graphLabelPropagation = Q(
     "graph_label_propagation",
@@ -1021,48 +1001,11 @@ object Flagships extends QueryModule {
         .agg(sum($"wgt").cast(org.apache.spark.sql.types.DecimalType(28, 2)).as("w"))
         .withColumn("rn", row_number().over(wTop))
         .filter($"rn" <= 3)
-        .select($"a", $"b", $"w")
-      val nodes = Tables.nation(spark, dir).select($"n_nationkey".as("node"), $"n_name")
-      // DRIVER-SIDE synchronous LPA rounds (r14, VERDICT r13 #8 / guide
-      // §5): the backbone is ≤ 3·nations edges and the label table
-      // ≤ nations rows BY CONSTRUCTION, yet the per-round checkpoint
-      // loop paid 35 Spark jobs for a 25-row answer. The backbone
-      // (aggregated/thinned in Spark, decimal arithmetic unchanged) and
-      // the node list are collected ONCE; vote sums add the exact
-      // scale-2 decimals (BigDecimal.add — order-independent), the
-      // argmax replicates the (vw desc, lab asc) row_number tiebreak
-      // via compareTo, isolated nodes keep their label (the left-join
-      // coalesce); labels return as a LocalTableScan and the
-      // size/name join below is unchanged Spark.
-      val symP: Seq[(Any, Any, java.math.BigDecimal)] =
-        sym.collect().toSeq.map(r => (r.get(0), r.get(1), r.getDecimal(2)))
-      val nodeIds: Seq[Any] = nodes.select($"node").collect().toSeq.map(_.get(0))
-      var labP: Map[Any, Any] = nodeIds.map(n => (n, n)).toMap
-      for (_ <- 1 to 3) {
-        val votes = symP
-          .flatMap { case (a, b, w2) => labP.get(b).map(l => ((a, l), w2)) }
-          .groupBy(_._1)
-          .map { case ((a, l), ws) =>
-            (a, l, ws.map(_._2).reduce(_.add(_))) }
-        val newLab = votes.groupBy(_._1).map { case (a, vs) =>
-          // (vw desc, lab asc) — the row_number tiebreak, numerically
-          val winner = vs.reduce { (x, y) =>
-            val c = x._3.compareTo(y._3)
-            if (c > 0) x
-            else if (c < 0) y
-            else if (x._2.asInstanceOf[Number].longValue <=
-                     y._2.asInstanceOf[Number].longValue) x else y
-          }
-          (a, winner._2)
-        }
-        labP = labP.map { case (n, old) => (n, newLab.getOrElse(n, old)) }
-      }
-      import scala.jdk.CollectionConverters._
-      val lab = spark.createDataFrame(
-        labP.toSeq.map { case (n, l) => org.apache.spark.sql.Row(n, l) }.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", nodes.schema("node").dataType),
-          org.apache.spark.sql.types.StructField("lab", nodes.schema("node").dataType))))
+        .select($"a".cast(LongType), $"b".cast(LongType), $"w")
+      val nodes = Tables.nation(spark, dir)
+        .select($"n_nationkey".cast(LongType).as("node"), $"n_name")
+      val lab = BoundedLoop("graph_label_propagation", Seq(nodes.select($"node"), sym),
+        StructType.fromDDL("node BIGINT, lab BIGINT"))(labelPropagationStep)
       val sizes = lab.groupBy($"lab").agg(count(lit(1)).as("community_size"))
       lab.join(broadcast(nodes), "node")
         .join(broadcast(sizes), "lab")
@@ -1122,6 +1065,28 @@ object Flagships extends QueryModule {
       """.stripMargin.trim
     })
 
+  /** Label propagation's 3 synchronous rounds over (node) and (a, b, w)
+    * backbone rows: each node takes the neighbor label with the largest
+    * exact vote sum, ties to the smaller label (the oracle's row_number
+    * order); a node with no votes keeps its label. Votes from a neighbor
+    * that is not a node are dropped, as the join drops them.
+    */
+  private[graft] def labelPropagationStep(in: IndexedSeq[Seq[Row]]): Seq[Row] = {
+    val nodes = in(0).map(_.getLong(0))
+    val sym = in(1).map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2)))
+    var lab = nodes.map(v => (v, v)).toMap
+    for (_ <- 1 to 3) {
+      val votes = sym.flatMap { case (a, b, w) => lab.get(b).map(l => ((a, l), w)) }
+        .groupMapReduce(_._1)(_._2)(_.add(_))
+      val won = votes.groupMapReduce(_._1._1) { case ((_, l), vw) => (vw, l) } { (x, y) =>
+        val c = x._1.compareTo(y._1)
+        if (c > 0 || (c == 0 && x._2 <= y._2)) x else y
+      }
+      lab = lab.map { case (v, old) => (v, won.get(v).fold(old)(_._2)) }
+    }
+    lab.toSeq.map { case (v, l) => Row(v, l) }
+  }
+
   /** K-CORE of the nation trade graph (SURVEY §2 I-sext) — the third
     * graph primitive next to PageRank (rank) and LPA (cluster): the
     * maximal subgraph where every member keeps ≥ k strong trade
@@ -1138,16 +1103,14 @@ object Flagships extends QueryModule {
     * Scale notes: the only fact-scale work is the one edge aggregation
     * (identical to PageRank's — revenue-weighted supplier→customer
     * nation pairs, exact decimal); the strong-edge table is ≤ nation²
-    * rows regardless of corpus scale, so peeling rides the driver on the
-    * collected pairs (r14 — the per-round checkpoint loop paid 25 Spark
-    * jobs of pure scheduling for a 15-row answer) and the survivors
-    * return as a local relation for the unchanged output aggregation.
+    * rows regardless of corpus scale, so peeling runs in one
+    * `BoundedLoop` task (`kcoreStep`; the per-round checkpoint loop paid
+    * 25 Spark jobs of pure scheduling for a 15-row answer).
     */
   val graphKcoreTrade = Q(
     "graph_kcore_trade",
     (spark, dir) => {
       import spark.implicits._
-      val k = 8
       val e0 = nationTradeEdges(spark, dir)
       val und = e0.where($"src" =!= $"dst")
         .select(least($"src", $"dst").as("u"), greatest($"src", $"dst").as("v"), $"wgt")
@@ -1157,30 +1120,9 @@ object Flagships extends QueryModule {
         (sum($"w").cast(DoubleType) / count(lit(1))).as("t"))
       val live0 = und.crossJoin(broadcast(thr))
         .where($"w".cast(DoubleType) >= $"t")
-        .select($"u", $"v")
-      // DRIVER-SIDE peeling (r14, VERDICT r13 #8 / guide §5): live0 is
-      // ≤ nation² rows BY CONSTRUCTION (nation is the bounded 25-row
-      // dimension), yet the per-round checkpoint loop paid 5 eager jobs +
-      // 4 broadcast builds for pure integer degree-counting — 25 Spark
-      // jobs total for a 15-row answer. The strong-edge table (built and
-      // thresholded in Spark, all decimal arithmetic unchanged) is
-      // collected ONCE; peeling is exact integer set logic replicating
-      // the unionAll/groupBy/count ≥ k/semi-join rounds verbatim; the
-      // survivor pairs return as a LocalTableScan with the identical
-      // schema and the output aggregation below is unchanged Spark.
-      val liveSchema = live0.schema
-      var liveP: Seq[(Any, Any)] =
-        live0.collect().toSeq.map(r => (r.get(0), r.get(1)))
-      for (_ <- 1 to 4) {
-        val deg = (liveP.map(_._1) ++ liveP.map(_._2))
-          .groupBy(identity).map { case (n, g) => (n, g.size) }
-        val keep = deg.collect { case (n, d) if d >= k => n }.toSet
-        liveP = liveP.filter(p => keep(p._1) && keep(p._2))
-      }
-      import scala.jdk.CollectionConverters._
-      val live = spark.createDataFrame(
-        liveP.map { case (u, v) => org.apache.spark.sql.Row(u, v) }.asJava,
-        liveSchema)
+        .select($"u".cast(LongType), $"v".cast(LongType))
+      val live = BoundedLoop("graph_kcore_trade", Seq(live0),
+        StructType.fromDDL("u BIGINT, v BIGINT"))(kcoreStep)
       val coreDeg = live.select($"u".as("node")).unionAll(live.select($"v".as("node")))
         .groupBy($"node").agg(count(lit(1)).as("core_degree"))
       val nodes = Tables.nation(spark, dir).select($"n_nationkey", $"n_name")
@@ -1232,6 +1174,18 @@ object Flagships extends QueryModule {
       ORDER BY n_nationkey
       """.stripMargin.trim
     })
+
+  /** K-core's 4 peeling rounds (k = 8) over strong (u, v) pairs: each round
+    * keeps the pairs whose two ends both have degree ≥ k.
+    */
+  private[graft] def kcoreStep(in: IndexedSeq[Seq[Row]]): Seq[Row] = {
+    var live = in(0).map(r => (r.getLong(0), r.getLong(1)))
+    for (_ <- 1 to 4) {
+      val deg = (live.map(_._1) ++ live.map(_._2)).groupMapReduce(identity)(_ => 1)(_ + _)
+      live = live.filter { case (u, v) => deg(u) >= 8 && deg(v) >= 8 }
+    }
+    live.map { case (u, v) => Row(u, v) }
+  }
 
   /** Adamic–Adar link prediction over the nation trade graph (SURVEY §2
     * I-sept) — "which two nations that do NOT trade today share the most
@@ -1526,9 +1480,10 @@ object Flagships extends QueryModule {
     * the mean. Graph = the same symmetrized top-3-per-node backbone LPA
     * clusters (near-complete raw graph makes closeness degenerate);
     * distances by 4 min-plus rounds over unit hops (≤5-hop horizon,
-    * declared — the same bounded-round contract as k-core/LPA), run on
-    * the driver over the collected ≤3·nations-row backbone (r14). Per
-    * node: reach count, eccentricity (within horizon), harmonic score.
+    * declared — the same bounded-round contract as k-core/LPA), run in
+    * one `BoundedLoop` task over the ≤3·nations-row backbone
+    * (`closenessStep`). Per node: reach count, eccentricity (within
+    * horizon), harmonic score.
     *
     * Scale notes (100 TB): fact-scale work is the ONE shared edge
     * aggregation (memoized stage); everything iterative runs on the
@@ -1550,34 +1505,9 @@ object Flagships extends QueryModule {
         .agg(sum($"wgt").cast(org.apache.spark.sql.types.DecimalType(28, 2)).as("w"))
         .withColumn("rn", row_number().over(wTop))
         .filter($"rn" <= 3)
-        .select($"a", $"b")
-      // DRIVER-SIDE min-plus rounds (r14, VERDICT r13 #8 / guide §5):
-      // the backbone is ≤ 3·nations directed edges BY CONSTRUCTION, yet
-      // the per-round checkpoint loop paid 32 Spark jobs for a 25-row
-      // answer. The backbone (aggregated and thinned in Spark, decimal
-      // arithmetic unchanged) is collected ONCE; each round replicates
-      // the carry ∪ (extend, nxt ≠ u) → min-per-(u,v) relaxation with
-      // exact integer hop counts; the distance table returns as a
-      // LocalTableScan and the harmonic aggregation below is unchanged.
-      val symP: Seq[(Any, Any)] = sym.collect().toSeq.map(r => (r.get(0), r.get(1)))
-      val adj = symP.groupBy(_._1)
-      var distP: Map[(Any, Any), Long] =
-        symP.map { case (a, b) => ((a, b), 1L) }.toMap
-      for (_ <- 1 to 4) {
-        val ext = distP.toSeq.flatMap { case ((u, v), d) =>
-          adj.getOrElse(v, Nil).collect { case (_, nxt) if nxt != u => ((u, nxt), d + 1L) }
-        }
-        distP = (distP.toSeq ++ ext)
-          .groupBy(_._1).map { case (k2, ds) => (k2, ds.map(_._2).min) }
-      }
-      import scala.jdk.CollectionConverters._
-      val dist = spark.createDataFrame(
-        distP.toSeq.map { case ((u, v), d) => org.apache.spark.sql.Row(u, v, d) }.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("u", sym.schema("a").dataType),
-          org.apache.spark.sql.types.StructField("v", sym.schema("b").dataType),
-          org.apache.spark.sql.types.StructField("d",
-            org.apache.spark.sql.types.LongType))))
+        .select($"a".cast(LongType), $"b".cast(LongType))
+      val dist = BoundedLoop("graph_harmonic_closeness", Seq(sym),
+        StructType.fromDDL("u BIGINT, v BIGINT, d BIGINT"))(closenessStep)
       val nodes = Tables.nation(spark, dir).select($"n_nationkey".as("u"), $"n_name")
       dist
         .groupBy($"u")
@@ -1641,6 +1571,22 @@ object Flagships extends QueryModule {
       """.stripMargin.trim
     })
 
+  /** Closeness' 4 min-plus rounds over (a, b) backbone rows: each round
+    * keeps the shortest hop count per (u, v) over the carried pairs and
+    * their one-edge extensions that do not return to u.
+    */
+  private[graft] def closenessStep(in: IndexedSeq[Seq[Row]]): Seq[Row] = {
+    val sym = in(0).map(r => (r.getLong(0), r.getLong(1)))
+    val adj = sym.groupMap(_._1)(_._2)
+    var dist = sym.map((_, 1L)).toMap
+    for (_ <- 1 to 4) {
+      val ext = dist.toSeq.flatMap { case ((u, v), d) =>
+        adj.getOrElse(v, Nil).collect { case nxt if nxt != u => ((u, nxt), d + 1L) } }
+      dist = (dist.toSeq ++ ext).groupMapReduce(_._1)(_._2)(math.min)
+    }
+    dist.toSeq.map { case ((u, v), d) => Row(u, v, d) }
+  }
+
   /** Bottleneck (maximin) path strength on the trade backbone (SURVEY
     * §2 I-non) — "how strong is the WEAKEST link on the BEST route":
     * for every ordered reachable pair of the top-3 backbone, the
@@ -1656,9 +1602,9 @@ object Flagships extends QueryModule {
     *
     * Scale notes (100 TB): fact-scale work is the ONE shared memoized
     * edge aggregation; the top-3 thinning bounds the relax table at
-    * ≤ nations² rows, so the 4 relaxation rounds ride the driver over
-    * the collected backbone (r14 — the per-round checkpoint loop paid
-    * 32 Spark jobs of scheduling for a 25-row answer). The declared
+    * ≤ nations² rows, so the 4 relaxation rounds run in one
+    * `BoundedLoop` task (`bottleneckStep`; the per-round checkpoint loop
+    * paid 32 Spark jobs of scheduling for a 25-row answer). The declared
     * ≤5-hop horizon is the bounded-round contract the closeness row set.
     */
   lazy val graphBottleneckPaths = Q(
@@ -1675,39 +1621,9 @@ object Flagships extends QueryModule {
         .agg(sum($"wgt").cast(org.apache.spark.sql.types.DecimalType(18, 4)).as("w"))
         .withColumn("rn", row_number().over(wTop))
         .filter($"rn" <= 3)
-        .select($"a", $"b", $"w")
-      // DRIVER-SIDE (max, min) relaxation (r14, VERDICT r13 #8 / guide
-      // §5): the backbone is ≤ 3·nations edges BY CONSTRUCTION and the
-      // semiring only COMPARES the exact decimal weights (never adds),
-      // so the per-round checkpoint loop's 32 Spark jobs were pure
-      // scheduling. The backbone (aggregated/thinned in Spark, decimal
-      // arithmetic unchanged) is collected ONCE; each round replicates
-      // carry ∪ (extend with least) → max-per-(u,v) using
-      // BigDecimal.compareTo (Spark decimal ordering); the relax table
-      // returns as a LocalTableScan and the output block is unchanged.
-      val bdMin = (x: java.math.BigDecimal, y: java.math.BigDecimal) =>
-        if (x.compareTo(y) <= 0) x else y
-      val symP: Seq[(Any, Any, java.math.BigDecimal)] =
-        sym.collect().toSeq.map(r => (r.get(0), r.get(1), r.getDecimal(2)))
-      val adj = symP.groupBy(_._1)
-      var bestP: Map[(Any, Any), java.math.BigDecimal] =
-        symP.map { case (a, b, w2) => ((a, b), w2) }.toMap
-      for (_ <- 1 to 4) {
-        val ext = bestP.toSeq.flatMap { case ((u, v), w2) =>
-          adj.getOrElse(v, Nil).collect {
-            case (_, nxt, w3) if nxt != u => ((u, nxt), bdMin(w2, w3)) }
-        }
-        bestP = (bestP.toSeq ++ ext)
-          .groupBy(_._1).map { case (k2, ws) => (k2, ws.map(_._2).reduce(
-            (x, y) => if (x.compareTo(y) >= 0) x else y)) }
-      }
-      import scala.jdk.CollectionConverters._
-      val best = spark.createDataFrame(
-        bestP.toSeq.map { case ((u, v), w2) => org.apache.spark.sql.Row(u, v, w2) }.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("u", sym.schema("a").dataType),
-          org.apache.spark.sql.types.StructField("v", sym.schema("b").dataType),
-          org.apache.spark.sql.types.StructField("w", sym.schema("w").dataType))))
+        .select($"a".cast(LongType), $"b".cast(LongType), $"w")
+      val best = BoundedLoop("graph_bottleneck_paths", Seq(sym),
+        StructType.fromDDL("u BIGINT, v BIGINT, w DECIMAL(18,4)"))(bottleneckStep)
       val wPeer = org.apache.spark.sql.expressions.Window
         .partitionBy($"u").orderBy($"w".desc, $"v")
       val names = Tables.nation(spark, dir).select($"n_nationkey", $"n_name")
@@ -1787,6 +1703,25 @@ object Flagships extends QueryModule {
       ORDER BY n_nationkey
       """.stripMargin.trim
     })
+
+  /** Bottleneck paths' 4 (max, min) rounds over (a, b, w) backbone rows:
+    * each round keeps the widest bottleneck per (u, v) over the carried
+    * pairs and their one-edge extensions that do not return to u. Weights
+    * are only compared, never added.
+    */
+  private[graft] def bottleneckStep(in: IndexedSeq[Seq[Row]]): Seq[Row] = {
+    val sym = in(0).map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2)))
+    val adj = sym.groupMap(_._1)(e => (e._2, e._3))
+    var best = sym.map { case (a, b, w) => ((a, b), w) }.toMap
+    for (_ <- 1 to 4) {
+      val ext = best.toSeq.flatMap { case ((u, v), w) =>
+        adj.getOrElse(v, Nil).collect {
+          case (nxt, w2) if nxt != u => ((u, nxt), if (w.compareTo(w2) <= 0) w else w2) } }
+      best = (best.toSeq ++ ext)
+        .groupMapReduce(_._1)(_._2)((x, y) => if (x.compareTo(y) >= 0) x else y)
+    }
+    best.toSeq.map { case ((u, v), w) => Row(u, v, w) }
+  }
 
   /** TPC-H Q2 shape adapted to this corpus (SURVEY §2 I-tredec; there
     * is no partsupp table — TESTDATA.md): the supply relation is the

@@ -2,17 +2,19 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Focused checks for the r14 driver-side graph iterations: the bounded
-  * per-round frames (≤ nation² rows by construction) now iterate on the
-  * driver instead of per-round checkpointed Spark jobs, so these tests
+/** Focused checks for the `BoundedLoop` iterations: the bounded
+  * per-round frames (≤ nation² rows by construction) iterate in one task
+  * instead of per-round checkpointed Spark jobs, so these tests
   * recompute the same answers with INDEPENDENT algorithms (per-source
   * BFS instead of min-plus relaxation; exhaustive walk enumeration
   * instead of (max, min) DP) and compare exactly. The DuckDB oracle
   * already re-derives every declared row from SQL; this pins the
-  * iteration internals in-repo.
+  * iteration internals, the helper's row bound and rounding, and the
+  * laziness of the declared frames in-repo.
   */
 class GraphDriverLoopSpec extends SparkSpecBase {
-  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.types.StructType
 
   /** The top-3-per-node symmetrized backbone exactly as the LPA /
     * closeness / bottleneck queries declare it (weights kept).
@@ -131,5 +133,88 @@ class GraphDriverLoopSpec extends SparkSpecBase {
     val rows = SparkEntry.queries("graph_kcore_trade")(spark, sfDir)
       .select($"n_nationkey".cast("long"), $"core_degree").as[(Long, Long)].collect()
     assert(rows.toMap == handDeg, s"declared ${rows.toMap} vs peel-to-fixpoint $handDeg")
+  }
+
+  test("bounded loop: building the six declared frames runs no job but markov's cell cut") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.Bridge
+    // what a harness warms first: the shared edge memo and the table schemas
+    operators.Flagships.prepareSharedStages(spark, sfDir)
+    Tables.events(spark, sfDir)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = started.add(js)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    def jobsWhileBuilding(name: String): Seq[SparkListenerJobStart] = {
+      Bridge.drainListenerBus(spark.sparkContext)
+      started.clear()
+      SparkEntry.queries(name)(spark, sfDir)
+      Bridge.drainListenerBus(spark.sparkContext)
+      started.toArray(Array.empty[SparkListenerJobStart]).toSeq
+    }
+    try {
+      for (name <- Seq("graph_pagerank_trade", "graph_label_propagation", "graph_kcore_trade",
+                       "graph_harmonic_closeness", "graph_bottleneck_paths")) {
+        val jobs = jobsWhileBuilding(name)
+        assert(jobs.isEmpty, s"$name ran ${jobs.size} jobs at construction")
+      }
+      // the cut is one SQL execution; AQE submits its stages from other
+      // threads, so only the job that runs the cut itself carries its call site
+      val markov = jobsWhileBuilding("agg_markov_stationary")
+      val executions = markov.map(_.properties.getProperty("spark.sql.execution.id")).distinct
+      assert(executions.size == 1 &&
+        markov.exists(_.stageInfos.exists(_.details.contains("graft.Checkpoints$.cut"))),
+        s"markov ran jobs besides its cell cut: ${markov.map(_.stageInfos.map(_.details)).mkString}")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("bounded loop: MaxRows rows pass, one more fails with RowBoundExceeded") {
+    val out = StructType.fromDDL("n BIGINT")
+    def loop(rows: Long) = BoundedLoop("bound_probe",
+      Seq(spark.range(3).toDF("k"), spark.range(rows).toDF("x")), out)(in =>
+      Seq(Row(in(1).size.toLong)))
+    assert(loop(BoundedLoop.MaxRows.toLong).collect().toSeq == Seq(Row(BoundedLoop.MaxRows.toLong)))
+    val e = intercept[Exception](loop(BoundedLoop.MaxRows + 1L).collect())
+    val over = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case b: BoundedLoop.RowBoundExceeded => b }
+    assert(over.exists(b => b.query == "bound_probe" && b.input == 1 && b.cap == BoundedLoop.MaxRows),
+      s"expected RowBoundExceeded(bound_probe, 1, ${BoundedLoop.MaxRows}), got $e")
+  }
+
+  test("bounded loop: round and decimalSum equal Spark on NaN, ±Inf, HALF_UP ties, negatives") {
+    val xs = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 0.0, -0.0,
+      2.5, -2.5, 0.5e-9, -0.5e-9, 1.0000000005, -1.0000000005, 0.1234567890125,
+      -0.1234567890125, 1.0 / 3, -2.0 / 3, 123456.7890123456)
+    val values = xs.map(x => s"(double('$x'))").mkString(", ")
+    for (scale <- Seq(0, 6, 9, 12)) {
+      val got = spark.sql(s"select x, round(x, $scale) from values $values as t(x)").collect()
+      got.foreach { r =>
+        val (x, want) = (r.getDouble(0), r.getDouble(1))
+        assert(java.lang.Double.compare(BoundedLoop.round(x, scale), want) == 0,
+          s"round($x, $scale): helper ${BoundedLoop.round(x, scale)} vs Spark $want")
+      }
+      val sum = spark.sql(s"select coalesce(cast(sum(cast(x as decimal(28, $scale))) as double), 0.0) " +
+        s"from values $values as t(x)").head().getDouble(0)
+      assert(BoundedLoop.decimalSum(xs, scale) == sum, s"decimalSum at scale $scale")
+    }
+    assert(BoundedLoop.decimalSum(Seq(Double.NaN, Double.NegativeInfinity), 9) == 0.0)
+  }
+
+  test("pagerank step: an edge whose endpoint is not a node is dropped, not a crash") {
+    val nodes = Seq(Row(1L), Row(2L))
+    val kept = Seq(Row(1L, 2L, 1.0), Row(2L, 1L, 0.5))
+    // 2 -> 3 leaks half of 2's rank to a non-node; 9 -> 1 starts at a non-node
+    val dirty = kept ++ Seq(Row(2L, 3L, 0.5), Row(9L, 1L, 1.0))
+    val got = operators.Flagships.pagerankStep(IndexedSeq(nodes, dirty)).toSet
+    assert(got.map(_.getLong(0)) == Set(1L, 2L))
+    assert(got == operators.Flagships.pagerankStep(IndexedSeq(nodes, kept)).toSet)
+  }
+
+  test("label propagation step: equal vote sums go to the smaller label") {
+    val w = new java.math.BigDecimal("1.00")
+    val got = operators.Flagships.labelPropagationStep(IndexedSeq(
+      Seq(Row(1L), Row(2L), Row(3L)), Seq(Row(1L, 3L, w), Row(1L, 2L, w))))
+    assert(got.map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(1L -> 2L, 2L -> 2L, 3L -> 3L))
   }
 }
